@@ -118,10 +118,6 @@ def snake_case(name: str) -> str:
     return name.replace("-", "_").lower()
 
 
-def snake_case_columns(df: DataFrame) -> DataFrame:
-    return df.toDF(*(snake_case(c) for c in df.columns))
-
-
 def titleize(name: str) -> str:
     """C10 display-name titleize (Form700.py:201): the reference's
     schema bootstrap runs ``inflection.titleize`` over each inferred
@@ -146,27 +142,16 @@ def schema_projection(df: DataFrame, fieldnames: list[str]) -> DataFrame:
     return df.select(*(qcol(f) for f in fieldnames))
 
 
-CAST_DISPATCH = {
-    "number": number_cast,
-    "text": text_cast,
-    "checkbox": checkbox_cast,
-    "date": date_cast_yyyymmdd,
-}
-
-
-def cast_fields(df: DataFrame, type_map: dict[str, str], date_compat: bool = False) -> DataFrame:
-    """Reference ``castFields`` (Form700.py:259-289): apply the declared
-    cast to each mapped column, leave others untouched.  Compiles to one
-    ``select`` — Catalyst folds the whole pipeline into a single stage."""
-    cols = []
-    for name in df.columns:
-        decl = type_map.get(name)
-        if decl is None:
-            cols.append(qcol(name))
-        elif decl == "date":
-            cols.append(date_cast_yyyymmdd(qcol(name), compat=date_compat).alias(name))
-        elif decl in CAST_DISPATCH:
-            cols.append(CAST_DISPATCH[decl](qcol(name)).alias(name))
-        else:
-            raise ValueError(f"unknown declared type {decl!r} for column {name!r}")
-    return df.select(*cols)
+def cast_column(col: str | Column, decl: str, date_compat: bool = False) -> Column:
+    """Reference ``castFields`` (Form700.py:259-289) for one column: the
+    cast its declared schema type (text/number/checkbox/date) calls for;
+    ``date_compat`` keeps dates as text like the reference does."""
+    if decl == "number":
+        return number_cast(col)
+    if decl == "text":
+        return text_cast(col)
+    if decl == "checkbox":
+        return checkbox_cast(col)
+    if decl == "date":
+        return date_cast_yyyymmdd(col, compat=date_compat)
+    raise ValueError(f"unknown declared type {decl!r}")

@@ -58,29 +58,6 @@ def explode_outer_flat(df: DataFrame, field: str, prefix: str = "") -> DataFrame
     return exploded.select(*parent_cols, *child_cols)
 
 
-def flatten_dotted(df: DataFrame, field: str) -> DataFrame:
-    """Reference N1 ``json_normalize`` (Form700.py:153, 181, 367): expand
-    a struct column into one column per leaf, nested structs becoming
-    DOTTED column names (``loan`` -> ``loan.address`` …, the shape the
-    scheduleB schema CSV declares).  Arrays are kept as columns — they
-    are routed later by N3 (stringify or explode).  A NULL struct (from
-    ``explode_outer`` of an empty filing) yields NULL leaves, matching
-    json_normalize of a missing object."""
-    from pyspark.sql import types as T
-
-    def leaves(col: Column, path: str, dtype: T.DataType) -> list[Column]:
-        if isinstance(dtype, T.StructType):
-            out: list[Column] = []
-            for f in dtype.fields:
-                sub = f"{path}.{f.name}" if path else f.name
-                out.extend(leaves(col.getField(f.name), sub, f.dataType))
-            return out
-        return [col.alias(path)]
-
-    keep = [F.col(c) for c in df.columns if c != field]
-    return df.select(*keep, *leaves(F.col(field), "", df.schema[field].dataType))
-
-
 def prefix_rename(name: str, prefix: str) -> str:
     """E2 (Form700.py:356-362): upper-camel the first letter, prepend
     the prefix (``fairMarketValue`` -> ``realPropertyFairMarketValue``)."""

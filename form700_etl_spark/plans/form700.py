@@ -5,12 +5,16 @@ Reference pipeline:  extract cover + 7 schedule tables → left-join filer
 info onto every schedule row (J1, :346-352) → clean per table: route
 list-columns to stringify/explode from the table registry's
 ``list_columns`` (N3, :325-344), project to the schema CSV (P1, :253),
-strip newlines (C7, :296-298), cast per declared type (C1/C2, :259-289)
-→ load — all eager pandas, one thread, twice (private + redacted,
-:716-718).  Here the same dataflow is a dict of lazy Catalyst plans:
-each explode is linear (not the reference's O(n²) loop), the enrichment
-join broadcasts the filer side, and the clean pass folds into one
-projected select inside whole-stage codegen per table.
+strip newlines (C7, :296-298), cast per declared type (C1/C2, :259-289),
+snake_case the names (C9, :464-468) → load — all eager pandas, one
+thread, twice (private + redacted, :716-718).  Here the same dataflow
+is a dict of lazy Catalyst plans: each explode is linear (not the
+reference's O(n²) loop), the enrichment join broadcasts the filer side,
+and the whole clean pass is compiled in one pass over the source's
+``StructType`` (``compile_dataset``): from the schema, the registry row
+and the schema CSV it decides every output column up front, so a
+dataset is one ``select`` per generator plus one final projection —
+no clean step re-reads the schema of a frame the step before it built.
 
 The routing is DATA, not code: ``resources/form700_tables.csv`` (the
 reference's registry shape — df_name, list_columns ``:``-split,
@@ -35,17 +39,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.cleaning import (
-    cast_fields,
-    qcol,
-    schema_projection,
-    snake_case_columns,
-    strip_newlines,
-)
-from ..functions.nested import explode_outer_flat, flatten_dotted, stringify_structs
+from ..functions.cleaning import cast_column, qcol, snake_case, strip_newlines
+from ..functions.nested import prefix_rename, stringify_structs
 from ..io import maybe_broadcast, table
-from ..schema_registry import TableInfo, load_schema, load_table_registry
+from ..schema_registry import DatasetSchema, TableInfo, load_schema, load_table_registry
 
 SCHEDULE_NAMES = (
     "scheduleA1",
@@ -113,7 +112,12 @@ def synthesize_filings(
     analysis + codegen for the full ~300-field tree first — on a fresh
     JVM that cost ran 36 s for ref_pipeline_scheduleA2 at sf0.1 vs
     1.9 s warm (BENCH_DETAIL r10 queries_cold).  Pruned and unpruned
-    plans produce identical values for every retained column.
+    plans agree on every retained column except one case: in a
+    single-schedule build (pre-filtered lineitem, below) a filing with
+    no rows for that schedule gets a NULL array where the full build
+    gets ``[]``.  The two agree only after ``explode_outer``, which
+    turns both into one row of NULL children — which is how every
+    pipeline dataset reads them.
 
     Every synthesized expression is rendered as a SQL STRING and enters
     the plan through ONE ``F.expr``/``selectExpr`` parse per output
@@ -540,42 +544,80 @@ def synthesize_filings(
     ).drop(*counts.values())
 
 
-def route_list_columns(df: DataFrame, info: TableInfo) -> DataFrame:
-    """N3 ``checkForListColumns`` (Form700.py:325-344), registry-driven:
-    stringify every listed array column EXCEPT gifts/realProperties,
-    which explode (realProperties with the E2 prefix).  The stringify
-    canonical key order is the struct's declared field order (the Py2
-    dict-iteration order is undefined; SURVEY §7 'hard parts')."""
+def compile_dataset(
+    source: T.StructType, info: TableInfo, schema: DatasetSchema
+) -> list[list[Column]]:
+    """C11 ``cleanDataSet`` (Form700.py:246-298), compiled from the source
+    schema alone: the select lists, applied in order, that turn the
+    filings frame into one dataset's sink columns.  Rows: cover is the
+    filing minus the schedule arrays; a schedule explodes its array,
+    filer columns riding along, struct leaves named by dotted path (N1).
+    Each registry list column (N3, :325-344) then stringifies (N2), or
+    explodes if ``gifts``/``realProperties`` (E1/E2, :354-383) — one
+    more select.  The last list is the P1 projection (:253): per schema
+    field, C7 newline strip for text, C1 cast with dates kept as text
+    (:259-298), C9 snake_case name (:464-468).  Raises ``KeyError`` for a
+    column the registry or schema CSV names but the dataset lacks, and
+    ``ValueError`` for an unknown declared type."""
+    types = {f.name: f.dataType for f in source.fields}
+    stages: list[list[Column]] = []
+    # logical (pre-snake_case) column name -> (expression, type)
+    fields: dict[str, tuple[Column, T.DataType]] = {}
+
+    def add_leaves(col: Column, path: str, dtype: T.StructType) -> None:
+        for f in dtype.fields:
+            sub = f"{path}.{f.name}" if path else f.name
+            if isinstance(f.dataType, T.StructType):
+                add_leaves(col.getField(f.name), sub, f.dataType)
+            else:
+                fields[sub] = (col.getField(f.name), f.dataType)
+
+    base = info.base_name
+    if base == "cover":
+        for name, dtype in types.items():
+            if name not in SCHEDULE_NAMES:
+                fields[name] = (qcol(name), dtype)
+    else:
+        stages.append(
+            [*map(qcol, FILER_COLS), F.explode_outer(qcol(base)).alias("__row")]
+        )
+        for name in FILER_COLS:
+            fields[name] = (qcol(name), types[name])
+        add_leaves(F.col("__row"), "", types[base].elementType)
+
     for col in info.list_columns:
-        if col not in df.columns:
+        if col not in fields:
             raise KeyError(
                 f"{info.df_name}: registry lists {col!r} but the table has no such column"
             )
+        expr, dtype = fields.pop(col)
+        children = dtype.elementType.fields
         if col in EXPLODE_COLUMNS:
-            df = explode_outer_flat(df, col, prefix=EXPLODE_COLUMNS[col])
+            stages.append(
+                [e.alias(name) for name, (e, _) in fields.items()]
+                + [F.explode_outer(expr).alias("__x")]
+            )
+            fields = {name: (qcol(name), t) for name, (_, t) in fields.items()}
+            for f in children:
+                name = prefix_rename(f.name, EXPLODE_COLUMNS[col])
+                fields[name] = (F.col("__x").getField(f.name), f.dataType)
         else:
-            fields = [f.name for f in df.schema[col].dataType.elementType.fields]
-            df = df.withColumn(col, stringify_structs(col, fields))
-    return df
+            fields[col] = (
+                stringify_structs(expr, [f.name for f in children]),
+                T.StringType(),
+            )
 
-
-def clean_dataset(df: DataFrame, info: TableInfo) -> DataFrame:
-    """C11 ``cleanDataSet`` (Form700.py:246-256): N3 routing -> P1 schema
-    projection -> C7 newline strip -> C1 casts, all one Catalyst plan.
-    Redacted twins share the base schema CSV (the reference's pairs are
-    column-identical)."""
-    schema = load_schema(info.base_name)
-    df = route_list_columns(df, info)
-    df = schema_projection(df, list(schema.fields))
-    df = df.select(
-        *[
-            strip_newlines(qcol(name)).alias(name)
-            if schema.type_map[name] == "text"
-            else qcol(name)
-            for name in schema.fields
-        ]
-    )
-    return cast_fields(df, schema.type_map, date_compat=True)
+    missing = [name for name in schema.fields if name not in fields]
+    if missing:
+        raise KeyError(f"{info.df_name}: schema names missing columns {missing}")
+    projection = []
+    for name in schema.fields:
+        decl, expr = schema.type_map[name], fields[name][0]
+        if decl == "text":
+            expr = strip_newlines(expr)
+        projection.append(cast_column(expr, decl, date_compat=True).alias(snake_case(name)))
+    stages.append(projection)
+    return stages
 
 
 def run_form700_pipeline(
@@ -587,10 +629,10 @@ def run_form700_pipeline(
     """EP1: nested filings → the full dict of flat clean tables (cover +
     7 schedules), each an independent lazy plan over the same source.
 
-    Per schedule: S5 per-key extraction (``explode_outer`` of the
-    filing-level array — read once, 8 projections, vs the reference's
-    re-traversal per schedule), N1 dotted flatten, then the
-    registry-driven clean pass.
+    The source schema is read once and each dataset is the selects
+    ``compile_dataset`` derives from it — no step reads back the schema
+    of a frame an earlier step built.  Batch and streaming sources take
+    the same path.
 
     J1 note: the reference left-joins filer columns back onto every
     schedule row (Form700.py:346-352) because its schedule tables were
@@ -607,19 +649,14 @@ def run_form700_pipeline(
     nested source tree, so single-table callers shouldn't pay for the
     other seven."""
     registry = registry or load_table_registry()
+    source = filings.schema
     out: dict[str, DataFrame] = {}
     for base in datasets or ("cover",) + SCHEDULE_NAMES:
         info = registry[base + suffix]
-        if base == "cover":
-            df = filings.drop(*SCHEDULE_NAMES)
-        else:
-            rows = filings.select(
-                *FILER_COLS, F.explode_outer(base).alias("__row")
-            )
-            df = flatten_dotted(rows, "__row")
-        # C9: snake_case on the way to the sink (Form700.py:464-468) —
-        # this is also where dotted loan.* names lose their dots
-        out[info.df_name] = snake_case_columns(clean_dataset(df, info))
+        df = filings
+        for cols in compile_dataset(source, info, load_schema(info.base_name)):
+            df = df.select(*cols)
+        out[info.df_name] = df
     return out
 
 

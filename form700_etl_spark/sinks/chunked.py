@@ -16,10 +16,12 @@ SURVEY §7 "hard parts" says design that out, not port it):
    BEFORE any executor writes — not "first chunk replaces", which
    races under task retry;
 2. executors write via ``foreachPartition``; each chunk is tagged with
-   a deterministic ``(partition_id, chunk_index)`` id and delivered
-   with ``upsert(chunk_id, rows)`` so a re-executed task overwrites
-   rather than duplicates (client contract: upsert by chunk id is
-   idempotent);
+   a ``(write token, partition_id, chunk_index)`` id and delivered with
+   ``upsert(chunk_id, rows)``.  The token is drawn once per ``write``
+   on the driver, so a re-executed task overwrites its own chunks
+   rather than duplicating them (client contract: upsert by chunk id
+   is idempotent), while a second upsert write of the same dataset
+   adds chunks instead of overwriting the first write's;
 3. per-chunk retry with exponential backoff + per-chunk throttle;
 4. audit (A2/A3) from per-partition count records returned by the write
    pass itself — one scan, and exact under task retry because Spark
@@ -37,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 from typing import Protocol
 
@@ -256,6 +259,9 @@ class ChunkedSink:
         from the iterator, ``rows_client_reported`` is what the
         endpoint's ``upsert`` acknowledged."""
         config, client = self.config, self.client
+        # one token per write: a retried task reuses it and overwrites
+        # its own chunks; another write of this dataset never collides
+        token = uuid.uuid4().hex[:8]
 
         if config.mode == "replace":
             client.truncate()  # once, on the driver, before any writes
@@ -273,7 +279,7 @@ class ChunkedSink:
                 nonlocal chunk_idx, rows_reported
                 if not chunk:
                     return
-                chunk_id = f"{dataset}-p{pid:05d}-c{chunk_idx:05d}"
+                chunk_id = f"{dataset}-{token}-p{pid:05d}-c{chunk_idx:05d}"
                 delay = config.delay_s
                 for attempt in range(config.tries):
                     try:

@@ -38,35 +38,39 @@ class ChunkCommit(WriterCommitMessage):
     rows: int
 
 
-class ChunkedDirWriter(DataSourceWriter):
-    def __init__(self, options, overwrite: bool):
+class _ChunkWriter:
+    """The task-side loop both writers share: rows go out in
+    ``chunk_size`` JSON files, each published by an atomic rename, and
+    the commit message lists them.  Subclasses name the files."""
+
+    def __init__(self, options):
         self.path = options["path"]
         self.chunk_size = int(options.get("chunk_size", "1000"))
-        self.overwrite = overwrite
         os.makedirs(self.path, exist_ok=True)
+
+    def _chunk_prefix(self, pid: int) -> str:
+        raise NotImplementedError
 
     def write(self, iterator) -> ChunkCommit:
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
+        prefix = self._chunk_prefix(TaskContext.get().partitionId())
         files: list[str] = []
         rows = 0
         chunk: list[dict] = []
-        chunk_idx = 0
 
         def flush():
-            nonlocal chunk_idx, rows
+            nonlocal rows
             if not chunk:
                 return
-            name = f"part-{pid:05d}-c{chunk_idx:05d}.json"
+            name = f"{prefix}-c{len(files):05d}.json"
             tmp = os.path.join(self.path, f".{name}.tmp")
             with open(tmp, "w") as fh:
                 json.dump(chunk, fh, default=str)
-            os.replace(tmp, os.path.join(self.path, name))  # atomic, idempotent
+            os.replace(tmp, os.path.join(self.path, name))  # atomic
             files.append(name)
             rows += len(chunk)
             chunk.clear()
-            chunk_idx += 1
 
         for row in iterator:
             chunk.append(row.asDict(recursive=True))
@@ -74,6 +78,27 @@ class ChunkedDirWriter(DataSourceWriter):
                 flush()
         flush()
         return ChunkCommit(files=tuple(files), rows=rows)
+
+    def _remove_chunks(self, messages) -> None:
+        """Abort: delete the chunk files of the tasks that reported."""
+        for m in messages:
+            if m is None:
+                continue
+            for f in m.files:
+                try:
+                    os.unlink(os.path.join(self.path, f))
+                except FileNotFoundError:
+                    pass
+
+
+class ChunkedDirWriter(_ChunkWriter, DataSourceWriter):
+    def __init__(self, options, overwrite: bool):
+        super().__init__(options)
+        self.overwrite = overwrite
+
+    def _chunk_prefix(self, pid: int) -> str:
+        # deterministic: a re-executed task overwrites its own chunks
+        return f"part-{pid:05d}"
 
     def commit(self, messages) -> None:
         manifest = {
@@ -86,17 +111,10 @@ class ChunkedDirWriter(DataSourceWriter):
         os.replace(tmp, os.path.join(self.path, "_MANIFEST"))
 
     def abort(self, messages) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                try:
-                    os.unlink(os.path.join(self.path, f))
-                except FileNotFoundError:
-                    pass
+        self._remove_chunks(messages)
 
 
-class ChunkedDirStreamWriter(DataSourceStreamWriter):
+class ChunkedDirStreamWriter(_ChunkWriter, DataSourceStreamWriter):
     """Streaming twin of the chunked sink: micro-batch exactly-once via
     per-batch manifests.
 
@@ -117,43 +135,11 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
     observable output, the same recipe as Spark's own file sink log.
     """
 
-    def __init__(self, options):
-        self.path = options["path"]
-        self.chunk_size = int(options.get("chunk_size", "1000"))
-        os.makedirs(self.path, exist_ok=True)
-
-    def write(self, iterator) -> ChunkCommit:
+    def _chunk_prefix(self, pid: int) -> str:
         import uuid
 
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        attempt = uuid.uuid4().hex[:8]  # unique per task attempt AND batch
-        files: list[str] = []
-        rows = 0
-        chunk: list[dict] = []
-        chunk_idx = 0
-
-        def flush():
-            nonlocal chunk_idx, rows
-            if not chunk:
-                return
-            name = f"stream-p{pid:05d}-{attempt}-c{chunk_idx:05d}.json"
-            tmp = os.path.join(self.path, f".{name}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(chunk, fh, default=str)
-            os.replace(tmp, os.path.join(self.path, name))
-            files.append(name)
-            rows += len(chunk)
-            chunk.clear()
-            chunk_idx += 1
-
-        for row in iterator:
-            chunk.append(row.asDict(recursive=True))
-            if len(chunk) >= self.chunk_size:
-                flush()
-        flush()
-        return ChunkCommit(files=tuple(files), rows=rows)
+        # unique per task attempt AND batch
+        return f"stream-p{pid:05d}-{uuid.uuid4().hex[:8]}"
 
     def commit(self, messages, batchId: int) -> None:
         manifest = {
@@ -167,14 +153,7 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
         os.replace(tmp, os.path.join(self.path, f"_BATCH-{batchId}"))
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                try:
-                    os.unlink(os.path.join(self.path, f))
-                except FileNotFoundError:
-                    pass
+        self._remove_chunks(messages)
 
 
 def committed_manifests(path: str) -> list[dict]:

@@ -21,12 +21,13 @@ FILING_SCHEMA = (
 
 
 def flaky_fetch_page(config: RestSourceConfig, page: int) -> dict:
-    """Fails the FIRST attempt for every page (marker files under
-    ``config.extra['fail_dir']`` track attempts across executor
-    processes), then succeeds — exercises the per-page retry path."""
+    """Fails the FIRST attempt for every page, then succeeds — exercises
+    the per-page retry path.  Marker files in the directory named by the
+    path part of ``config.url`` (``fake-flaky:///tmp/...``) track
+    attempts across driver and executor processes."""
     import os
 
-    fail_dir = config.extra["fail_dir"]
+    fail_dir = config.url.split("://", 1)[1]
     marker = os.path.join(fail_dir, f"attempted-{page}")
     try:
         with open(marker, "x"):

@@ -70,6 +70,14 @@ def _fetch_with_retry(fetch_page: FetchPage, config: RestSourceConfig, page: int
     raise AssertionError("unreachable")
 
 
+def page_records(body: dict, key_to_pluck: str | None) -> list:
+    """S4: the records of one decoded page — ``body[key_to_pluck]``, else
+    ``body['items']``, else the body itself; a lone record becomes a
+    one-item list."""
+    payload = body.get(key_to_pluck) if key_to_pluck else body.get("items", body)
+    return payload if isinstance(payload, list) else [payload]
+
+
 def requests_fetch_page(config: RestSourceConfig, page: int) -> dict:
     """Real transport (S1+S2): cookie auth once per task, then POST the
     page request.  Import-gated: the bench/test image has no network."""
@@ -115,10 +123,10 @@ class PaginatedRestSource:
         config, fetch_page = self.config, self.fetch_page
 
         def records_of(page_body: dict, page_idx: int) -> list[tuple[int, str]]:
-            payload = page_body.get(key_to_pluck) if key_to_pluck else page_body.get("items", page_body)
-            if not isinstance(payload, list):
-                payload = [payload]
-            return [(page_idx, json.dumps(rec, sort_keys=True)) for rec in payload]
+            return [
+                (page_idx, json.dumps(rec, sort_keys=True))
+                for rec in page_records(page_body, key_to_pluck)
+            ]
 
         first_rows = records_of(first, 1)
 

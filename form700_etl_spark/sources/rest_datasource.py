@@ -15,10 +15,11 @@ API so it composes with the normal reader surface:
 Planning mirrors the reference's dynamic page-count discovery
 (/root/reference/Form700.py:129-144): ``partitions()`` probes page 1
 on the driver, then emits ONE InputPartition PER PAGE, so Spark
-schedules page fetches exactly like file splits — parallel, retryable
-per-task, locality-free.  Options travel as strings (the V2 contract),
-so the transport is named as ``module:function`` and imported inside
-the executor.
+schedules page fetches exactly like file splits — parallel and
+locality-free; every fetch, probes included, retries with
+``RestSourceConfig``'s backoff as ``PaginatedRestSource`` does.
+Options travel as strings (the V2 contract), so the transport is
+named as ``module:function`` and imported inside the executor.
 """
 
 from __future__ import annotations
@@ -33,12 +34,20 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .rest import RestSourceConfig
+from .rest import RestSourceConfig, _fetch_with_retry, page_records
 
 
-def _load_transport(spec: str):
-    mod, _, fn = spec.partition(":")
-    return getattr(importlib.import_module(mod), fn)
+def _fetch(transport_spec: str, config: RestSourceConfig, page: int) -> dict:
+    """One page through the ``module:function`` transport, retried with
+    the config's backoff — under ``local[N]`` Spark does not retry a
+    failed task, so a transient page error must not reach it."""
+    mod, _, fn = transport_spec.partition(":")
+    fetch_page = getattr(importlib.import_module(mod), fn)
+    return _fetch_with_retry(fetch_page, config, page)
+
+
+def _total_pages(transport_spec: str, config: RestSourceConfig) -> int:
+    return int(_fetch(transport_spec, config, 1).get("totalMatchingPages", 1))
 
 
 class _PagePartition(InputPartition):
@@ -58,13 +67,9 @@ def _options_to_config(options) -> RestSourceConfig:
 def _read_page(config, transport_spec, key_to_pluck, schema, page) -> Iterator[tuple]:
     """Fetch one page on the executor and yield schema-ordered tuples —
     shared by the batch and streaming readers (one page == one task)."""
-    fetch = _load_transport(transport_spec)
-    body = fetch(config, page)
-    payload = body.get(key_to_pluck) if key_to_pluck else body.get("items", body)
-    if not isinstance(payload, list):
-        payload = [payload]
+    body = _fetch(transport_spec, config, page)
     field_names = [f.name for f in schema.fields]
-    for rec in payload:
+    for rec in page_records(body, key_to_pluck):
         yield tuple(_coerce(rec.get(name)) for name in field_names)
 
 
@@ -77,9 +82,7 @@ class PaginatedRestReader(DataSourceReader):
         self.key_to_pluck = options.get("key_to_pluck")
 
     def partitions(self):
-        fetch = _load_transport(self.transport_spec)
-        first = fetch(self.config, 1)
-        total = int(first.get("totalMatchingPages", 1))
+        total = _total_pages(self.transport_spec, self.config)
         return [_PagePartition(p) for p in range(1, total + 1)]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
@@ -105,7 +108,7 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
       a run-local throttle below the committed page would rewind);
     - ``partitions(start, end)`` emits one InputPartition per page in
       ``(start, end]`` — page fetches parallelize across executors and
-      retry per-task, exactly like the batch reader;
+      retry per fetch, exactly like the batch reader;
     - offsets are checkpointed by the engine, so restart resumes after
       the last *committed* page instead of re-extracting the world —
       replace-the-world becomes exactly-once page tailing;
@@ -128,8 +131,7 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
         return {"page": 0}
 
     def latestOffset(self) -> dict:
-        fetch = _load_transport(self.transport_spec)
-        total = int(fetch(self.config, 1).get("totalMatchingPages", 1))
+        total = _total_pages(self.transport_spec, self.config)
         if self._last == 0:
             # first report of this run: the true feed head.  The throttle
             # counter is reader-local, so after a restart reporting

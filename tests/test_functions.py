@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from form700_etl_spark.functions.cleaning import (
-    cast_fields,
+    cast_column,
     number_cast,
     snake_case,
     text_cast,
@@ -48,10 +48,10 @@ def test_text_cast_fills_null(spark):
     assert [r.v for r in df.select(text_cast("raw").alias("v")).collect()] == ["", "x"]
 
 
-def test_cast_fields_unknown_type_raises(spark):
+def test_cast_column_unknown_type_raises(spark):
     df = spark.createDataFrame([("1",)], "a string")
     try:
-        cast_fields(df, {"a": "geometry"})
+        df.select(cast_column("a", "geometry"))
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "geometry" in str(e)

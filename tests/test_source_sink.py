@@ -36,10 +36,7 @@ class TestPaginatedRestSource:
         from form700_etl_spark.sources.fake import flaky_fetch_page
 
         config = RestSourceConfig(
-            url="fake://x",
-            tries=3,
-            retry_delay_s=0.01,
-            extra={"fail_dir": str(tmp_path)},
+            url=f"fake-flaky://{tmp_path}", tries=3, retry_delay_s=0.01
         )
         src = PaginatedRestSource(config, flaky_fetch_page)
         df = src.read(spark, FILING_SCHEMA, key_to_pluck="filings")
@@ -73,6 +70,21 @@ class TestPaginatedRestDataSource:
         assert sorted(r.filingId for r in rows) == list(range(N_PAGES * PAGE_SIZE))
         assert df.rdd.getNumPartitions() == N_PAGES  # one task per page
         assert rows[0].offices[0].position == "p"  # nested structs survive
+
+    def test_datasource_retries_transient_page_errors(self, spark, tmp_path):
+        from form700_etl_spark.sources.rest_datasource import register_rest_datasource
+
+        register_rest_datasource(spark)
+        df = (
+            spark.read.format("paginated_rest")
+            .schema(FILING_SCHEMA)
+            .option("transport", "form700_etl_spark.sources.fake:flaky_fetch_page")
+            .option("url", f"fake-flaky://{tmp_path}")
+            .option("key_to_pluck", "filings")
+            .load()
+        )
+        # the page-1 probe and every page task fail once, then recover
+        assert sorted(r.filingId for r in df.collect()) == list(range(N_PAGES * PAGE_SIZE))
 
     def test_datasource_requires_explicit_schema(self, spark):
         from form700_etl_spark.sources.rest_datasource import register_rest_datasource
@@ -333,6 +345,20 @@ class TestChunkedSink:
             config = ChunkedSinkConfig(chunk_size=1000, tries=5, delay_s=0.01, throttle_s=0.0)
             report = ChunkedSink(client, config).write(df, dataset="region")
             assert report.success
+
+    def test_upsert_writes_accumulate(self, spark, sf_dir):
+        region = table(spark, sf_dir, "region")
+        with tempfile.TemporaryDirectory() as tmp:
+            sink = ChunkedSink(LocalDirClient(tmp), ChunkedSinkConfig(mode="upsert", throttle_s=0.0))
+            sink.write(region.filter("r_regionkey < 2"), "region")
+            sink.write(region.filter("r_regionkey >= 2"), "region")
+            keys = sorted(
+                row["r_regionkey"]
+                for f in os.listdir(tmp)
+                if f.endswith(".json")
+                for row in json.load(open(os.path.join(tmp, f)))
+            )
+            assert keys == sorted(r.r_regionkey for r in region.collect())
 
     def test_replace_truncates_previous_contents(self, spark, sf_dir):
         df = table(spark, sf_dir, "region")
